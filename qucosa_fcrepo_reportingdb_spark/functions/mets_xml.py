@@ -9,9 +9,11 @@ namespace prefixes (MetsProcessor.java:67-69,81-85,221-251):
 
 Namespace awareness is mandatory: fixtures bind the MODS namespace to
 varying prefixes (``v3`` in qucosa13-mets.xml), so Spark's prefix-literal
-``xpath_*`` functions cannot match reliably. Extraction therefore runs in an
-Arrow-batched pandas UDF over stdlib ElementTree — one parse per document,
-vectorized transfer, no JVM round-trips per field.
+``xpath_*`` functions cannot match reliably. Extraction is therefore a
+plain Python function over stdlib ElementTree, one parse per document.
+It runs where the document already is: inside the ``mapInPandas`` fetch
+pass (sources/mets.py), so the XML never crosses into the JVM and every
+later action over the batch is JVM-only.
 
 X10 (local-id extraction oai:example.org:qucosa:123 -> qucosa:123,
 MetsProcessor.java:285-287) stays JVM-side as regexp_extract.
@@ -21,22 +23,20 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 METS_NS = "http://www.loc.gov/METS/"
 MODS_NS = "http://www.loc.gov/mods/v3"
 
-_EXTRACT_SCHEMA = T.StructType([
-    T.StructField("mandator", T.StringType()),
-    T.StructField("document_type", T.StringType()),
-    T.StructField("distribution_date_raw", T.StringType()),
-])
 
-
-def _extract_one(xml: str | None) -> tuple[str | None, str | None, str | None]:
+def extract_mets_fields(
+        xml: str | None) -> tuple[str | None, str | None, str | None]:
+    """(mandator, document_type, distribution_date_raw) of one METS
+    document; each is None when absent or blank, all three when the
+    document is missing or unparsable. Validation (reject blank
+    mandator/document_type or unparsable date, F4) is a separate step:
+    filters.validate_reporting_documents."""
     if not xml:
         return (None, None, None)
     try:
@@ -60,27 +60,6 @@ def _extract_one(xml: str | None) -> tuple[str | None, str | None, str | None]:
     if el is not None and el.text:
         date_raw = el.text.strip() or None
     return (mandator, document_type, date_raw)
-
-
-@F.pandas_udf(_EXTRACT_SCHEMA)
-def _extract_mets_fields(xmls: pd.Series) -> pd.DataFrame:
-    rows = [_extract_one(x) for x in xmls]
-    return pd.DataFrame(rows, columns=["mandator", "document_type",
-                                       "distribution_date_raw"])
-
-
-def extract_mets_metadata(df: DataFrame, xml_col: str = "xml") -> DataFrame:
-    """Add mandator / document_type / distribution_date_raw columns
-    extracted from the METS XML column. Validation (reject blank
-    mandator/document_type or unparsable date — F4) is a separate step:
-    filters.validate_reporting_documents."""
-    return (
-        df.withColumn("__m", _extract_mets_fields(F.col(xml_col)))
-        .withColumn("mandator", F.col("__m.mandator"))
-        .withColumn("document_type", F.col("__m.document_type"))
-        .withColumn("distribution_date_raw", F.col("__m.distribution_date_raw"))
-        .drop("__m")
-    )
 
 
 def local_identifier(col: Column | str) -> Column:

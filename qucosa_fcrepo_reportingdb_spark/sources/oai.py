@@ -75,7 +75,9 @@ class OaiHarvestSource:
     def load_state(self) -> HarvestState:
         if not self.store.exists(OAI_RUN_RESULT_TABLE):
             return EMPTY_STATE
-        rows = latest_checkpoint(self.store.read(OAI_RUN_RESULT_TABLE)).collect()
+        # a declared schema skips the schema-inference job a bare read runs
+        rows = latest_checkpoint(self.store.read(
+            OAI_RUN_RESULT_TABLE, schemas.OAI_RUN_RESULT_SCHEMA)).collect()
         if not rows:
             return EMPTY_STATE
         r = rows[0]
@@ -162,7 +164,8 @@ class OaiHarvestSource:
         if not state.has_resumption_token:
             # retention (T7/S9) once per sequence instead of per page
             cutoff = start_of_run - self.history_length
-            checkpoints = self.store.read(OAI_RUN_RESULT_TABLE)
+            checkpoints = self.store.read(OAI_RUN_RESULT_TABLE,
+                                          schemas.OAI_RUN_RESULT_SCHEMA)
             self.store.overwrite(OAI_RUN_RESULT_TABLE,
                                  retain_recent(checkpoints, cutoff))
         return state

@@ -7,9 +7,12 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from qucosa_fcrepo_reportingdb_spark import schemas
+from qucosa_fcrepo_reportingdb_spark.pipeline import ReportingPipeline
 from qucosa_fcrepo_reportingdb_spark.sources.mets import (
     REPORTING_DOCUMENTS_TABLE,
     enrich_once,
+    extract_and_validate,
+    fetch_mets_documents,
     fixture_mets_fetcher,
 )
 from qucosa_fcrepo_reportingdb_spark.sources.oai import (
@@ -17,7 +20,9 @@ from qucosa_fcrepo_reportingdb_spark.sources.oai import (
     OAI_RUN_RESULT_TABLE,
     OaiHarvestSource,
     fixture_fetcher,
+    read_header_queue,
 )
+from qucosa_fcrepo_reportingdb_spark.tables import TableStore
 from tests import fixtures_oai as fx
 
 
@@ -291,3 +296,72 @@ def test_crash_between_document_merge_and_queue_delete_converges(
     assert res["processed"] == 2
     assert store.read(REPORTING_DOCUMENTS_TABLE).count() == 2   # no dupes
     assert store.read(OAI_HEADER_TABLE).count() == 0            # drained
+
+
+def test_enrich_batch_runs_no_python_after_the_fetch(spark, store):
+    """The fetch pass extracts each METS document where it fetches it, so
+    the persisted batch already carries the three fields. Both sides of
+    extract_and_validate (read by the counts, both merges and the queue
+    delete) must then plan no Python node above the in-memory scan:
+    every action over the batch stays in the JVM."""
+    py_markers = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                  "FlatMapGroupsInPandas", "MapInArrow")
+    mets_docs = {
+        "qucosa:13": fx.mets_document("SLUB", "issue", "2008-08-04"),
+        "qucosa:31789": fx.mets_document(None, None, "2010-01-01"),
+    }
+    d = datetime(2015, 12, 17, 16, 3, 17)
+    store.overwrite(OAI_HEADER_TABLE, spark.createDataFrame(
+        [(f"oai:example.org:{k}", d, [], False) for k in mets_docs],
+        schemas.OAI_HEADER_SCHEMA))
+    fetched = fetch_mets_documents(read_header_queue(store),
+                                   fixture_mets_fetcher(mets_docs)).persist()
+    try:
+        assert fetched.count() == 2
+        valid, rejected = extract_and_validate(fetched)
+        assert (valid.count(), rejected.count()) == (1, 1)
+        for side in (valid, rejected):
+            plan = side._jdf.queryExecution().executedPlan().toString()
+            above_scan, found, cached = plan.partition("InMemoryRelation")
+            assert found and "InMemoryTableScan" in above_scan, plan
+            # the fetch pass itself is Python, and is found where it is
+            assert any(m in cached for m in py_markers), plan
+            assert not [m for m in py_markers if m in above_scan], plan
+    finally:
+        fetched.unpersist()
+
+
+def _janino_compilations(spark) -> int:
+    """Whole-stage classes Janino has compiled in this JVM so far."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
+
+
+def test_repeated_cycle_reuses_generated_code(spark, tmp_path):
+    """A repeated pipeline cycle plans the same queries again, so its
+    generated classes must come from the codegen cache rather than from
+    another Janino compile. At Spark's default cache size (100 entries in
+    4 LRU segments) a cycle evicts its own classes before reuse, and the
+    second identical cycle recompiled 59 classes when this test ran alone;
+    session.get_spark sizes the cache to hold a cycle. What may still compile are classes
+    whose source differs between cycles (inlined literals such as the
+    checkpoint-retention cutoff)."""
+    mets_docs = {
+        "qucosa:1044": fx.mets_document("SLUB", "issue", "2008-08-04"),
+        "qucosa:2222": fx.mets_document(None, None, "2016-10-10"),
+    }
+
+    def cycle(name):
+        store = TableStore(spark, str(tmp_path / name))
+        return ReportingPipeline(
+            spark, store,
+            oai_fetch=fixture_fetcher([fx.WITH_TOKEN, fx.WITH_EMPTY_TOKEN]),
+            mets_fetch=fixture_mets_fetcher(mets_docs)).run_until_idle()
+
+    first = cycle("first")
+    before = _janino_compilations(spark)
+    second = cycle("second")
+    compiled = _janino_compilations(spark) - before
+    assert second == first == {"pages": 2, "processed": 2, "persisted": 1,
+                               "rejected": 1}
+    assert compiled <= 20, compiled

@@ -13,7 +13,7 @@ from qucosa_fcrepo_reportingdb_spark.functions.filters import (
     qucosa_document_filter,
 )
 from qucosa_fcrepo_reportingdb_spark.functions.mets_xml import (
-    extract_mets_metadata,
+    extract_mets_fields,
 )
 from qucosa_fcrepo_reportingdb_spark.functions.oai_xml import (
     explode_headers,
@@ -89,22 +89,20 @@ def test_reference_filter_corpus_13_to_6(spark):
      ("slub", "article", datetime(2016, 10, 10, 9, 27, 33))),
 ])
 def test_reference_mets_extraction(spark, fixture, expected):
-    df = spark.createDataFrame([(_read(fixture),)], "xml string")
-    row = (extract_mets_metadata(df, "xml")
-           .withColumn("dd", parse_xsd_datetime(F.col("distribution_date_raw")))
-           .collect()[0])
-    assert (row.mandator, row.document_type, row.dd) == expected
+    mandator, document_type, date_raw = extract_mets_fields(_read(fixture))
+    dd = (spark.createDataFrame([(date_raw,)], "raw string")
+          .select(parse_xsd_datetime(F.col("raw"))).first()[0])
+    assert (mandator, document_type, dd) == expected
 
 
-def test_reference_incomplete_mets_rejected(spark):
+def test_reference_incomplete_mets_rejected():
     # qucosa31789 lacks metsHdr and div/@TYPE -> must extract nothing usable
-    df = spark.createDataFrame([(_read("mets/qucosa31789-mets.xml"),)],
-                               "xml string")
-    row = extract_mets_metadata(df, "xml").collect()[0]
-    assert row.mandator is None and row.document_type is None
+    mandator, document_type, _ = extract_mets_fields(
+        _read("mets/qucosa31789-mets.xml"))
+    assert mandator is None and document_type is None
 
 
-def test_mets_extraction_ignores_foreign_namespace_collisions(spark):
+def test_mets_extraction_ignores_foreign_namespace_collisions():
     """Round-5 directive 7: the reference's XPath binds mets:/mods:
     prefixes to their namespace URIs (MetsProcessor.java:67-69,81-85),
     so an element with the RIGHT local name in the WRONG namespace must
@@ -123,10 +121,7 @@ def test_mets_extraction_ignores_foreign_namespace_collisions(spark):
         "<x:dateIssued>1999-01-01</x:dateIssued></x:originInfo></x:mods>"
         "</mets>"
     )
-    df = spark.createDataFrame([(evil,)], "xml string")
-    row = extract_mets_metadata(df, "xml").collect()[0]
-    assert (row.mandator, row.document_type,
-            row.distribution_date_raw) == (None, None, None)
+    assert extract_mets_fields(evil) == (None, None, None)
 
     # both present: the namespace-bound elements win, foreign ones are
     # invisible even when they come FIRST in document order
@@ -146,7 +141,4 @@ def test_mets_extraction_ignores_foreign_namespace_collisions(spark):
         "<m:dateIssued>2008-08-04</m:dateIssued></m:originInfo></m:mods>"
         "</mets>"
     )
-    df2 = spark.createDataFrame([(both,)], "xml string")
-    row2 = extract_mets_metadata(df2, "xml").collect()[0]
-    assert (row2.mandator, row2.document_type,
-            row2.distribution_date_raw) == ("SLUB", "issue", "2008-08-04")
+    assert extract_mets_fields(both) == ("SLUB", "issue", "2008-08-04")
